@@ -14,24 +14,12 @@ package graft
   * measurably inflates timings (round 4 saw 2-4x phantom "regressions"
   * from exactly that).
   *
-  * Current snapshot: round-18 second-pass floors, min-rule-merged with
-  * BOTH round-19 optimization closing runs — session 1 (255/525.2s,
-  * zero flags/errors, inflation 1.334; 22 floors lowered) and session 2
-  * (255/507.8s, one flag — x91, solo_ok in-artifact at 5.66s vs its
-  * 3.11 r16-era floor, the same phantom the r18 verdict's task 6
-  * documents — zero errors, inflation 1.285; 21 more floors lowered:
-  * x129 12.90→8.23, x116 10.82→7.54, x115 8.42→5.32, x122 8.20→5.46,
-  * x67 2.29→1.86…). Every session-2 lowering beat a ~1.29×-inflated
-  * box, so each is a real same-code speedup (the r19 grading box reads
-  * uniformly ~1.3× above the r18 snapshot box, so only genuinely
-  * faster queries could lower floors there): 22 lowered, 233 carried.
-  * The large drops are the round's optimizations (single-pass recall
-  * curves — x128 12.21→5.71, x117 10.22→6.91, x114 9.97→6.65, x112
-  * 7.31→6.24, pl12 8.65→6.36; codegen'd OPQ cross-matrix — x129
-  * 16.73→12.90, x122 9.63→8.20); see OPTIMIZATION_r19.md for the
-  * same-box A/B evidence. The committed `bench_full.json` is that
-  * closing run (per-query gc_ms, suite_inflation, env bookends —
-  * adjudicate flags from the artifact first).
+  * Current snapshot: each floor is the minimum of its round-18 floor and
+  * the two round-19 closing runs' readings (min rule): 31 lowered, 224
+  * carried. Each entry's comment says which. The committed
+  * `bench_full.json` is the closing run (per-query gc_ms,
+  * suite_inflation, env bookends — adjudicate flags from the artifact
+  * first).
   */
 object BenchExpectations {
   val RegressionFactor = 2.0

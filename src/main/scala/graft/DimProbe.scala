@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Dev-only DIMENSIONALITY probe (round-13 verdict task 6): the gate
@@ -31,15 +30,7 @@ object DimProbe {
     val bigDim = args.headOption.flatMap(_.toIntOption).getOrElse(768)
     val rowFactor = args.drop(1).headOption.flatMap(_.toIntOption).getOrElse(10)
     require(bigDim % BaseDim == 0, s"bigDim must be a multiple of $BaseDim")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.sources.Tables.configure(spark)
+    val spark = GraftSession.local(defaultCpus = 32)
 
     val outDir = s"${sys.props("java.io.tmpdir")}/graft_dimprobe_${bigDim}x$rowFactor"
     if (!new java.io.File(s"$outDir/d$BaseDim.parquet").exists()) {

@@ -30,15 +30,7 @@ object Explain {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.sources.Tables.configure(spark)
+    val spark = GraftSession.local(defaultCpus = 4)
     if (args.isEmpty) {
       SparkEntry.queries.keys.toSeq.sorted.foreach(println)
     } else if (args(0) == "--audit") {

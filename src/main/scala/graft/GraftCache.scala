@@ -33,14 +33,6 @@ object GraftCache {
     p
   }
 
-  /** Register an ALREADY-persisted frame for the next [[release]] — for
-    * iterative operators that persist/unpersist per round themselves and
-    * hand over only the surviving frame. */
-  def track[T](ds: Dataset[T]): Dataset[T] = {
-    tracked.add(ds)
-    ds
-  }
-
   /** Number of tracked (not yet released) frames — for tests. */
   def trackedCount: Int = tracked.size()
 

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only scale probe: blows the sf0.1 testdata up by an integer factor
@@ -114,36 +114,24 @@ object ScaleProbe {
       args.drop(1).toSeq else args.toSeq
     val names = if (rest.nonEmpty) rest else DefaultQueries
     val outDir = s"${sys.props("java.io.tmpdir")}/graft_scale_sf0.1x$factor"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // NOTE: driver heap cannot be set here — the JVM is already
-      // running. build.sbt's forked `run` sets -Xmx (SPARK_DRIVER_MEM,
-      // default 8g), which is what actually governs the 10x blow-up.
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.sources.Tables.configure(spark)
+    val spark = GraftSession.local(defaultCpus = 32)
 
     if (!new java.io.File(s"$outDir/embeddings.parquet").exists()) {
       println(s"building ${factor}x blow-up at $outDir ...")
-      blowUpEmbeddings(spark, factor, outDir)
+      blowUp(spark, "embeddings", "vec_id", factor, outDir)
       blowUpDocuments(spark, factor, outDir)
     }
-    // lineitem joined the probe corpus in round 17 (s21); build it even
-    // into a pre-round-17 blow-up dir
-    if (!new java.io.File(s"$outDir/lineitem.parquet").exists())
-      blowUpLineitem(spark, factor, outDir)
-    // customer joined in round 18 (the MOR evolution/maintenance gates);
-    // its modular changesets scale with the copies, so merges stay
-    // changeset-proportional under the probe
-    if (!new java.io.File(s"$outDir/customer.parquet").exists())
-      blowUpCustomer(spark, factor, outDir)
-    // orders joined in round 18 (the s24 Delta export commits slices of it)
-    if (!new java.io.File(s"$outDir/orders.parquet").exists())
-      blowUpOrders(spark, factor, outDir)
+    // Tables that joined the probe corpus later are built on their own,
+    // even into an older blow-up dir: lineitem (s21's bloom skip index
+    // faces a 10x-larger table and key domain), customer (the MOR
+    // evolution/maintenance gates; its modular changesets scale with the
+    // copies, so merges stay changeset-proportional) and orders (s24's
+    // Delta export commits slices of it).
+    Seq("lineitem" -> "l_orderkey", "customer" -> "c_custkey",
+        "orders" -> "o_orderkey").foreach { case (table, key) =>
+      if (!new java.io.File(s"$outDir/$table.parquet").exists())
+        blowUp(spark, table, key, factor, outDir)
+    }
     println(f"${"query"}%-26s ${"sf0.1"}%9s ${s"sf0.1x$factor"}%9s  ratio")
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
@@ -167,62 +155,22 @@ object ScaleProbe {
     spark.stop()
   }
 
-  /** factor copies with disjoint id ranges: copy i shifts ids by
-    * i × (max_id + 1). Vector values are kept — ANN cost per candidate
-    * pair is value-independent, and the quantizer chains only care
-    * about row count. */
-  private def blowUpEmbeddings(spark: SparkSession, factor: Int,
-                               outDir: String): Unit = {
-    val e = spark.read.parquet(s"$SrcDir/embeddings.parquet")
-    val offset = e.agg(max("vec_id")).head.getLong(0) + 1
-    val rest = e.columns.filterNot(_ == "vec_id").map(col).toSeq
+  /** factor copies of `table` with disjoint `key` ranges: copy i shifts
+    * `key` by i × (max + 1), every other column kept as is. Embedding
+    * values survive unchanged — ANN cost per candidate pair is
+    * value-independent, and the quantizer chains only care about row
+    * count. customer's shift stays far below the +10M insert-key shift
+    * the MOR changesets use, so no collision at any probe factor. */
+  private def blowUp(spark: SparkSession, table: String, key: String,
+                     factor: Int, outDir: String): Unit = {
+    val t = spark.read.parquet(s"$SrcDir/$table.parquet")
+    val offset = t.agg(max(key)).head.getLong(0) + 1
+    val rest = t.columns.filterNot(_ == key).map(col).toSeq
     (0 until factor).map { i =>
-      e.select((col("vec_id") + lit(i * offset)).as("vec_id") +: rest: _*)
+      t.select((col(key) + lit(i * offset)).as(key) +: rest: _*)
     }.reduce(_ unionByName _)
       .repartition(32)
-      .write.mode("overwrite").parquet(s"$outDir/embeddings.parquet")
-  }
-
-  /** factor copies with disjoint ORDER key ranges (copy i shifts
-    * l_orderkey like the embedding ids) — s21's bloom skip index then
-    * faces a genuinely 10×-larger table and key domain. */
-  private def blowUpLineitem(spark: SparkSession, factor: Int,
-                             outDir: String): Unit = {
-    val l = spark.read.parquet(s"$SrcDir/lineitem.parquet")
-    val offset = l.agg(max("l_orderkey")).head.getLong(0) + 1
-    val rest = l.columns.filterNot(_ == "l_orderkey").map(col).toSeq
-    (0 until factor).map { i =>
-      l.select((col("l_orderkey") + lit(i * offset)).as("l_orderkey") +: rest: _*)
-    }.reduce(_ unionByName _)
-      .repartition(32)
-      .write.mode("overwrite").parquet(s"$outDir/lineitem.parquet")
-  }
-
-  /** factor copies with disjoint c_custkey ranges (copy i shifts by
-    * i × (max_key + 1) — far below the +10M insert-key shift the MOR
-    * changesets use, so no collision at any probe factor). */
-  private def blowUpCustomer(spark: SparkSession, factor: Int,
-                             outDir: String): Unit = {
-    val c = spark.read.parquet(s"$SrcDir/customer.parquet")
-    val offset = c.agg(max("c_custkey")).head.getLong(0) + 1
-    val rest = c.columns.filterNot(_ == "c_custkey").map(col).toSeq
-    (0 until factor).map { i =>
-      c.select((col("c_custkey") + lit(i * offset)).as("c_custkey") +: rest: _*)
-    }.reduce(_ unionByName _)
-      .repartition(32)
-      .write.mode("overwrite").parquet(s"$outDir/customer.parquet")
-  }
-
-  private def blowUpOrders(spark: SparkSession, factor: Int,
-                           outDir: String): Unit = {
-    val o = spark.read.parquet(s"$SrcDir/orders.parquet")
-    val offset = o.agg(max("o_orderkey")).head.getLong(0) + 1
-    val rest = o.columns.filterNot(_ == "o_orderkey").map(col).toSeq
-    (0 until factor).map { i =>
-      o.select((col("o_orderkey") + lit(i * offset)).as("o_orderkey") +: rest: _*)
-    }.reduce(_ unionByName _)
-      .repartition(32)
-      .write.mode("overwrite").parquet(s"$outDir/orders.parquet")
+      .write.mode("overwrite").parquet(s"$outDir/$table.parquet")
   }
 
   /** factor copies with disjoint ids AND per-copy token namespaces

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -37,15 +36,7 @@ object Verify {
     // args: <sfDir> <outDir> [query ...] — extra args select a query
     // subset (dev-only targeted runs; the driver always passes exactly 2).
     val (sfDir, outDir, only) = (args(0), args(1), args.drop(2).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.sources.Tables.configure(spark)
+    val spark = GraftSession.local(defaultCpus = 4)
     new java.io.File(outDir).mkdirs()
     // oracle_sql.json is written FIRST: it depends on nothing the queries
     // compute, and writing it last meant a single wedged query lost the

@@ -43,8 +43,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * per-cell count(1), identical for every cell since each well-formed
   * row feeds all cells). Rows with a NULL vector on either side are
   * skipped (the exploded form generated nothing for them); a non-null
-  * vector of the wrong length aborts loudly — silently partial cells
-  * would corrupt the fit.
+  * vector of the wrong length or with a NULL element aborts loudly —
+  * silently partial cells would corrupt the fit.
   */
 @ExpressionDescription(
   usage = "_FUNC_(y, x, dim, scale, split) - Procrustes cross-matrix sums on two exact long halves, plus the row count.")
@@ -60,6 +60,8 @@ case class CrossMatrixSum(
 
   require(dim > 0, "dim must be positive")
   require(scale > 0 && split > 0, "scale/split must be positive")
+  require(2L * dim * dim + 1 <= Int.MaxValue,
+    s"dim $dim: the 2·dim²+1 aggregation buffer overflows Int")
 
   private val dimSq = dim * dim
 
@@ -93,6 +95,9 @@ case class CrossMatrixSum(
       val xl = new Array[Long](dim)
       var i = 0
       while (i < dim) {
+        if (yd.isNullAt(i) || xd.isNullAt(i))
+          throw new IllegalArgumentException(
+            s"cross_matrix_sum got a NULL vector element at index $i")
         yl(i) = lattice(yd.getDouble(i))
         xl(i) = lattice(xd.getDouble(i))
         i += 1

@@ -81,11 +81,6 @@ object Aggregations {
   def freqCount(df: DataFrame, key: String): DataFrame =
     df.groupBy(key).agg(count(lit(1)).as("n")).orderBy(desc("n"), col(key))
 
-  /** A6/A7: distinct count + sorted distinct values
-    * (pac_data_processor.py:22-23,342-343). */
-  def distinctCount(df: DataFrame, key: String): DataFrame =
-    df.agg(countDistinct(col(key)).as("n_distinct"))
-
   /** A6 scale path: HyperLogLog++ approximate distinct count. Exact
     * `countDistinct` shuffles every distinct value; at 100 TB cardinality
     * the sketch (fixed-size, mergeable, map-side combined) is the right

@@ -94,11 +94,9 @@ object Cleaning {
       .withColumn("record_type", lit(recordType))
 
   /** P10: per-row id. The reference uses uuid4
-    * (pac_snowflake_pipeline.py:121); `uuid()` is the direct equivalent but
-    * nondeterministic, so the oracle-stable variant derives the id from the
-    * record's own key fields (SURVEY.md §7.3). */
-  def withUuid(df: DataFrame, name: String = "firebase_id"): DataFrame =
-    df.withColumn(name, expr("uuid()"))
+    * (pac_snowflake_pipeline.py:121); `uuid()` would be the direct
+    * equivalent but is nondeterministic, so the id derives from the
+    * record's own key fields instead (SURVEY.md §7.3). */
   def deterministicId(keys: Column*): Column =
     sha2(concat_ws("§", keys: _*), 256)
 

@@ -873,25 +873,6 @@ object Multimodal {
     * member concatenation decoded as utf-8 text. */
   case class RecoveredDoc(doc_id: Long, text: String, lang: String)
 
-  /** Inflate WARC-shaped payloads back to text rows — the FIRST stage of
-    * a crawl-ingest pipeline (pl17): strict member walk + verify
-    * ([[GzipMembers]]), then utf-8 decode; quarantined payloads are
-    * DROPPED here (the quarantine accounting belongs to
-    * [[decodeGzipMembers]]' `decoded` flag, the resizeImages precedent).
-    * Iterator-to-iterator, one row in → at most one row out — at 100 TB
-    * the inflate runs inside the scan partition, no extra exchange. */
-  def inflateWarcText(spark: SparkSession,
-                      media: DataFrame): Dataset[RecoveredDoc] = {
-    import spark.implicits._
-    media.as[MediaBlob].mapPartitions { rows =>
-      rows.flatMap { blob =>
-        GzipMembers.parse(blob.payload).map { case (_, content) =>
-          RecoveredDoc(blob.doc_id, new String(content, "UTF-8"), blob.lang)
-        }
-      }
-    }
-  }
-
   /** Wrap a text table as WARC-shaped payloads for the x125 gate: the
     * utf-8 text split into `chunkLen`-byte records, each its own gzip
     * member, members concatenated — so member count and sizes are pure

@@ -98,6 +98,30 @@ class CrossMatrixSumSpec extends SparkSpec {
     assert(e.getMessage != null)
   }
 
+  test("a NULL element inside a vector aborts loudly, never reads as 0") {
+    import spark.implicits._
+    val dim = 2
+    for (df <- Seq(
+        Seq((Seq[Option[Double]](Some(1.0), None), Seq(0.5, -0.5))).toDF("y", "x"),
+        Seq((Seq(1.0, 2.0), Seq[Option[Double]](None, Some(-0.5)))).toDF("y", "x"))) {
+      val e = intercept[Exception] {
+        df.agg(crossAgg(dim)(col("y"), col("x")).as("m")).head()
+      }
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(c => c.isInstanceOf[IllegalArgumentException] &&
+          c.getMessage.contains("NULL vector element")), e)
+    }
+  }
+
+  test("a dim whose 2·dim²+1 buffer overflows Int is rejected up front") {
+    def agg(dim: Int) = graft.functions.CrossMatrixSum(
+      ColumnBridge.expression(col("y")), ColumnBridge.expression(col("x")),
+      dim, Scale, Split)
+    assert(agg(32767).dim == 32767) // 2·32767²+1 still fits
+    val e = intercept[IllegalArgumentException](agg(32768))
+    assert(e.getMessage.contains("overflows Int"))
+  }
+
   test("overflowing products abort loudly (the ANSI contract), never wrap") {
     import spark.implicits._
     val dim = 1
