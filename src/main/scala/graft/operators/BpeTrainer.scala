@@ -7,6 +7,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BooleanType, LongType, StringType, StructField, StructType}
 
+import graft.GraftCache
+
 /** BPE merge-rule learning over the corpus's token sequences — the
   * tokenizer-TRAINING arrow of the pipeline (Sennrich et al., "Neural
   * Machine Translation of Rare Words with Subword Units", ACL 2016 §3.2;
@@ -35,8 +37,9 @@ import org.apache.spark.sql.types.{BooleanType, LongType, StringType, StructFiel
   * id-partitioned window passes, one pair-count aggregation (map-side
   * partials; pair vocabulary, not corpus, crosses the wire) and ONE
   * driver-side row (the argmax pair — the Lloyd-iteration pattern). Each
-  * iteration local-checkpoints so the plan stays shallow over any
-  * iteration count. Production tokenizer training runs on a bounded
+  * iteration is a tracked local checkpoint that frees its predecessor
+  * ([[graft.GraftCache.advance]]), so neither the plan nor the blocks
+  * held grow with the iteration count. Production tokenizer training runs on a bounded
   * sample of the corpus (hash-stratified, see Curation.stratifiedSample)
   * — the recurrence is the same; the gate trains on the whole table.
   *
@@ -97,7 +100,7 @@ object BpeTrainer {
     val spark = df.sparkSession
     import spark.implicits._
 
-    var seqs = explodeTokens(df, idCol, textCol).localCheckpoint()
+    var seqs = GraftCache.checkpoint(explodeTokens(df, idCol, textCol))
     // every applied merge removes exactly one row, so n_merged is the
     // row-count delta between checkpoints — no separate flagged-frame
     // materialization or filter-count job per iteration
@@ -116,7 +119,7 @@ object BpeTrainer {
       else {
         val (a, b, cnt) =
           (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
-        seqs = applyFlagged(flagMerges(seqs, a, b)).localCheckpoint()
+        seqs = GraftCache.advance(seqs, applyFlagged(flagMerges(seqs, a, b)))
         val newRows = seqs.count()
         learned += ((it, a, b, cnt, nRows - newRows))
         nRows = newRows
@@ -164,7 +167,7 @@ object BpeTrainer {
     require(batchN > 0, "batchN must be positive")
     val spark = df.sparkSession
     import spark.implicits._
-    var seqs = explodeTokens(df, idCol, textCol).localCheckpoint()
+    var seqs = GraftCache.checkpoint(explodeTokens(df, idCol, textCol))
     val learned = ArrayBuffer.empty[(Int, Int, String, String, Long, Long)]
     var scan = 1
     var exhausted = false
@@ -176,9 +179,8 @@ object BpeTrainer {
       val accepted = selectNonInteracting(counts, batchN)
       if (accepted.isEmpty) exhausted = true
       else {
-        val flagged =
-          flagMergesMulti(seqs, accepted.map(t => (t._1, t._2)))
-            .localCheckpoint()
+        val flagged = GraftCache.checkpoint(
+          flagMergesMulti(seqs, accepted.map(t => (t._1, t._2))))
         val merged = flagged.filter(col("mstart"))
           .groupBy("sym", "nsym").agg(count(lit(1)).as("m"))
           .collect()
@@ -186,7 +188,8 @@ object BpeTrainer {
         accepted.zipWithIndex.foreach { case ((a, b, c), k) =>
           learned += ((scan, k + 1, a, b, c, merged.getOrElse((a, b), 0L)))
         }
-        seqs = applyFlagged(flagged).localCheckpoint()
+        seqs = GraftCache.advance(seqs, applyFlagged(flagged))
+        GraftCache.unpersist(flagged)
         scan += 1
       }
     }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.GraftCache
+
 /** Deduplication & lookup joins (SURVEY.md §2.4 J1-J2) plus the exact-dedup
   * primitive the training-data extensions build on.
   */
@@ -90,120 +92,91 @@ object Dedup {
     * round's plan twice (union + message join), doubling analyzer and
     * optimizer work per round — exponential in the round count (measured:
     * heap exhaustion by round ~12). Local checkpoint keeps the per-round
-    * plan O(1); blocks of finished rounds are reclaimed by the
-    * ContextCleaner once unreferenced. On a cluster with long-running
-    * jobs, reliable `checkpoint()` trades speed for fault tolerance (a
-    * lost executor invalidates local checkpoints).
+    * plan O(1). On a cluster with long-running jobs, reliable
+    * `checkpoint()` trades speed for fault tolerance (a lost executor
+    * invalidates local checkpoints). The rounds' exchanges run at the
+    * width [[withDerivedWidth]] derives from the symmetric edge count.
     *
-    * Caching contract: the symmetric edge list persists via
-    * [[graft.GraftCache]] (read every round); call `GraftCache.release()`
-    * after consuming the result. The returned frame's checkpoint blocks
-    * free themselves once the caller drops the reference. Throws if
-    * `maxIter` rounds do not converge (silently-partial components would
-    * be wrong, not slow). */
-  /** Runs `body` with `spark.sql.shuffle.partitions` set to `n`, restoring
-    * the previous value after. Only EAGER operations inside `body`
-    * (localCheckpoint, emptiness probes) see the cap — callers must not
-    * return lazily-shuffling plans from `body`. Session-global, so safe
-    * only under sequential query execution (Bench/Verify/specs all are). */
-  private[operators] def withShufflePartitions[T](spark: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try body finally spark.conf.set(key, prev)
-  }
-
+    * Caching contract: the symmetric edge list (read every round) and the
+    * round checkpoints are tracked by [[graft.GraftCache]]; each round
+    * frees its predecessor, so the edge list and the final round are all
+    * that stay tracked. Call `GraftCache.release()` after consuming the
+    * result — not before: the returned frame reads the final checkpoint.
+    * Throws if `maxIter` rounds do not converge (silently-partial
+    * components would be wrong, not slow). */
   def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
-                          maxIter: Int = 50,
-                          shufflePartitions: Option[Int] = None): DataFrame =
-    shufflePartitions match {
-      case Some(n) =>
-        // Small-graph mode (batch-sized component graphs): every round's
-        // exchange is capped at n partitions — 32-way shuffles over a
-        // few hundred rows are pure task-scheduling overhead — and the
-        // edge persist is a localCheckpoint (at this scale the storage
-        // layer's bookkeeping exceeds recompute; round-11 verdict). The
-        // whole loop materializes inside the conf window (every round
-        // ends in an eager localCheckpoint), and the returned frame is
-        // already checkpointed, so nothing lazily shuffles after restore.
-        withShufflePartitions(edges.sparkSession, n)(
-          ccLoop(edges, srcCol, dstCol, maxIter, persistEdges = false))
-      case None => ccLoop(edges, srcCol, dstCol, maxIter, persistEdges = true,
-        deriveWidth = true)
-    }
-
-  /** Edges per round-shuffle partition when the loop derives its own
-    * width (~16 MB of 16-byte edge rows — small for the guide's
-    * 100 MB–1 GB band, but the label/message frames a CC round shuffles
-    * are several times the edge count, and a round is many aggregations
-    * of the same keys, so the effective partition is larger). */
-  private val CcEdgesPerPartition = 1L << 20
-
-  private def ccLoop(edges: DataFrame, srcCol: String, dstCol: String,
-                     maxIter: Int, persistEdges: Boolean,
-                     deriveWidth: Boolean = false): DataFrame = {
+                          maxIter: Int = 50): DataFrame = {
     val e = edges.select(col(srcCol).as("s"), col(dstCol).as("d"))
-    val symRaw = e.union(e.select(col("d").as("s"), col("s").as("d"))).distinct()
-    val sym =
-      if (persistEdges) graft.GraftCache.persist(symRaw)
-      else symRaw.localCheckpoint()
-
-    def run(): DataFrame = {
+    val sym = GraftCache.persist(
+      e.union(e.select(col("d").as("s"), col("s").as("d"))).distinct())
+    withDerivedWidth(sym) {
       // Seed with round 1 for free: least(id, min(neighbor)) is exactly what
       // one propagation round over comp=id would produce, and the groupBy
       // costs the same keyed shuffle the old `distinct()` init paid anyway.
-      var labels = sym.groupBy(col("s").as("id")).agg(min(col("d")).as("__mn"))
-        .select(col("id"), least(col("id"), col("__mn")).as("comp"))
-        .localCheckpoint()
+      var round = GraftCache.checkpoint(
+        sym.groupBy(col("s").as("id")).agg(min(col("d")).as("__mn"))
+          .select(col("id"), least(col("id"), col("__mn")).as("comp")))
       var converged = false
       var rounds = 0
       while (!converged && rounds < maxIter) {
         // Old labels ride through the min-aggregation under a flag column, so
         // convergence is a scan of the (tiny, checkpointed) round result —
-        // not a second keyed shuffle joining `next` back to `labels`.
+        // not a second keyed shuffle joining the next round back to `labels`.
+        val labels = round.select("id", "comp")
         val msgs = sym.join(labels, sym("s") === labels("id"))
           .select(col("d").as("id"), col("comp"), lit(false).as("__old"))
-        // eager localCheckpoint: materializes the round AND flattens its plan
-        val next = labels.select(col("id"), col("comp"), lit(true).as("__old"))
-          .union(msgs)
-          .groupBy("id")
-          .agg(min("comp").as("comp"),
-            min(when(col("__old"), col("comp"))).as("__prev"))
-          .localCheckpoint()
-        converged = next.filter(col("comp") =!= col("__prev")).isEmpty
-        labels = next.select("id", "comp")
+        round = GraftCache.advance(round,
+          labels.select(col("id"), col("comp"), lit(true).as("__old"))
+            .union(msgs)
+            .groupBy("id")
+            .agg(min("comp").as("comp"),
+              min(when(col("__old"), col("comp"))).as("__prev")))
+        converged = round.filter(col("comp") =!= col("__prev")).isEmpty
         rounds += 1
       }
       require(converged,
         s"connectedComponents did not converge in $maxIter rounds — " +
           "component labels would be incomplete; raise maxIter")
-      labels.withColumnRenamed("comp", "component")
+      round.select(col("id"), col("comp").as("component"))
     }
+  }
 
-    if (!deriveWidth) run()
-    else {
-      // Scale-ADAPTIVE round width (optimization r19, guide §2.2): the
-      // loop's per-round exchanges run at min(session default, edge
-      // count / [[CcEdgesPerPartition]] + 1) partitions — derived from
-      // the materialized symmetric edge frame, never a constant. The
-      // near-dup component graph is a vanishing fraction of the corpus
-      // (pl15's mined graph at sf0.1 is ~10² edges), so session-default
-      // 32-way shuffles per round were pure task-scheduling overhead —
-      // the incrementalComponents merge loop had this cap hard-wired
-      // (Some(4)); this derives it, and a production-sized graph keeps
-      // the session default untouched (min(), never a raise). Counting
-      // the edge frame costs one action over data the seed round was
-      // about to materialize anyway; labels are component-count bounded
-      // (≤ edge endpoints), so the derived width fits them a fortiori.
-      // Partitioning cannot perturb results: min-label propagation is
-      // a commutative/associative fold per key.
-      val spark = edges.sparkSession
-      val default = spark.conf.get("spark.sql.shuffle.partitions").toInt
-      val width = math.min(default.toLong,
-        sym.count() / CcEdgesPerPartition + 1L).toInt
-      if (width >= default) run()
-      else withShufflePartitions(spark, width)(run())
-    }
+  /** Edges per round-shuffle partition when a loop derives its width
+    * (~16 MB of 16-byte edge rows — small for the guide's 100 MB–1 GB
+    * band, but the label/message frames a CC round shuffles are several
+    * times the edge count, and a round is many aggregations of the same
+    * keys, so the effective partition is larger). */
+  private val CcEdgesPerPartition = 1L << 20
+
+  /** Runs a graph loop's `body` at a scale-ADAPTIVE shuffle width
+    * (optimization r19, guide §2.2): min(session default, |edges| /
+    * [[CcEdgesPerPartition]] + 1) partitions, derived from the
+    * materialized edge frame, never a constant. Near-dup component graphs
+    * and source graphs are a vanishing fraction of the corpus (pl15's
+    * mined graph at sf0.1 is ~10² edges), so session-default 32-way
+    * shuffles per round are pure task-scheduling overhead, while a
+    * production-sized graph keeps the session default untouched (min(),
+    * never a raise). Counting costs one action over a frame the loop
+    * reads every round anyway. Partitioning cannot perturb results: the
+    * loops are exact integer sums or min-label folds per key. Only EAGER
+    * operations inside `body` see the width, so `body` must return a
+    * frame that shuffles nothing lazily. */
+  private[operators] def withDerivedWidth[T](edges: DataFrame)(body: => T): T = {
+    val spark = edges.sparkSession
+    val default = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val width = math.min(default.toLong,
+      edges.count() / CcEdgesPerPartition + 1L).toInt
+    if (width >= default) body else withShufflePartitions(spark, width)(body)
+  }
+
+  /** Runs `body` with `spark.sql.shuffle.partitions` set to `n`, restoring
+    * the previous value after. Session-global, so safe only under
+    * sequential query execution (Bench/Verify/specs all are). */
+  private def withShufflePartitions[T](spark: SparkSession, n: Int)(body: => T): T = {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, n.toString)
+    try body finally spark.conf.set(key, prev)
   }
 
   /** [[connectedComponents]] by alternating star contraction — the
@@ -222,8 +195,10 @@ object Dedup {
     *
     * Per-round work is two groupBy-min aggregations + two equi-joins on the
     * (shrinking) edge set — partitionable keyed shuffles only, no
-    * driver-side data; rounds are [[org.apache.spark.sql.Dataset#localCheckpoint]]ed
-    * like the propagation loop so per-round plans stay O(1). Convergence =
+    * driver-side data; rounds are tracked local checkpoints
+    * ([[graft.GraftCache.checkpoint]]) like the propagation loop, so
+    * per-round plans stay O(1) and each round frees its predecessor once
+    * the convergence probe has read both. Convergence =
     * the round leaves the edge set unchanged (two anti-join emptiness
     * probes on the contracted frame, which at that point is one edge per
     * non-root node — the cheapest frame the loop ever sees). */
@@ -232,11 +207,11 @@ object Dedup {
     // Input pairs are usually an expensive computed frame (a near-dup
     // join): persist ONCE; verts and the working edge set both read the
     // cache. Caller releases via GraftCache.release() like connectedComponents.
-    val e0 = graft.GraftCache.persist(
+    val e0 = GraftCache.persist(
       edges.select(col(srcCol).as("u"), col(dstCol).as("v")).distinct())
     val verts = e0.select(col("u").as("id"))
       .union(e0.select(col("v").as("id"))).distinct()
-    var e = e0.filter(col("u") =!= col("v")).localCheckpoint()
+    var e = GraftCache.checkpoint(e0.filter(col("u") =!= col("v")))
     var converged = e.isEmpty // self-loop-only input: nothing to contract
     var rounds = 0
     while (!converged && rounds < maxIter) {
@@ -261,11 +236,12 @@ object Dedup {
       // smaller neighbors off m = min of those neighbors. Emits (u, m) per
       // node plus (v, m) for the displaced smaller neighbors.
       val ss0 = ls.withColumn("__m", min(col("v")).over(wU))
-      val ss = ss0.filter(col("v") =!= col("__m"))
+      val ss = GraftCache.checkpoint(ss0.filter(col("v") =!= col("__m"))
         .select(col("v").as("u"), col("__m").as("v"))
         .union(ss0.select(col("u"), col("__m").as("v")))
-        .distinct().localCheckpoint()
+        .distinct())
       converged = ss.exceptAll(e).isEmpty && e.exceptAll(ss).isEmpty
+      GraftCache.unpersist(e)
       e = ss
       rounds += 1
     }
@@ -306,45 +282,39 @@ object Dedup {
     * `labels` must be (id, component) as produced by
     * [[connectedComponents]]/[[connectedComponentsStar]] over the OLD
     * edge set; returns the same shape covering
-    * nodes(labels) ∪ nodes(newEdges). Intermediates are eager
-    * local checkpoints (batch-sized by construction), freed with the
-    * returned frame's references — nothing to release. */
+    * nodes(labels) ∪ nodes(newEdges). Intermediates are batch-sized
+    * tracked local checkpoints, and every eager step runs at the width
+    * [[withDerivedWidth]] derives from |newEdges|; call
+    * `GraftCache.release()` after consuming the result. The returned frame
+    * shuffles nothing lazily: both corpus-side operations below are
+    * broadcast joins. */
   def incrementalComponents(labels: DataFrame, newEdges: DataFrame,
                             srcCol: String, dstCol: String): DataFrame = {
     val lab = labels.select(col("id"), col("component"))
-    val spark = labels.sparkSession
-    // Every frame in here is batch-sized (≤ 2·|newEdges| rows), so the
-    // whole update runs under a small shuffle-partition cap and uses
-    // eager localCheckpoint instead of GraftCache.persist — at
-    // few-hundred-row scale 32-way exchanges are pure task-scheduling
-    // overhead and the storage layer's bookkeeping exceeds recompute
-    // (round-11 verdict). The frame returned to the caller shuffles
-    // nothing lazily: both corpus-side operations below are broadcast
-    // joins.
-    val (all, compEdges) = withShufflePartitions(spark, 4) {
-      val e = newEdges.select(col(srcCol).as("s"), col(dstCol).as("d"))
-        .localCheckpoint()
-      val ends = e.select(col("s").as("id"))
-        .union(e.select(col("d").as("id"))).distinct().localCheckpoint()
+    val e = GraftCache.checkpoint(
+      newEdges.select(col(srcCol).as("s"), col(dstCol).as("d")))
+    val (all, compEdges) = withDerivedWidth(e) {
+      val ends = GraftCache.checkpoint(e.select(col("s").as("id"))
+        .union(e.select(col("d").as("id"))).distinct())
       // The corpus is scanned ONCE here (plus once by the final remap):
       // the batch-sized endpoint set BROADCASTS into an inner join
       // against the standing labels — no corpus shuffle — and every
       // later join touches only batch-sized frames.
-      val known = lab.join(broadcast(ends), Seq("id")).localCheckpoint()
+      val known = GraftCache.checkpoint(
+        lab.join(broadcast(ends), Seq("id")))
       // endpoint -> its current component (own id when unlabeled)
-      val endLabels = ends.join(broadcast(known), Seq("id"), "left")
-        .select(col("id"), coalesce(col("component"), col("id")).as("comp"))
-        .localCheckpoint()
+      val endLabels = GraftCache.checkpoint(
+        ends.join(broadcast(known), Seq("id"), "left")
+          .select(col("id"), coalesce(col("component"), col("id")).as("comp")))
       // Both endpoint-label attachments broadcast the one endLabels frame,
       // so they fuse into a single no-exchange stage over e (the round-11
       // "fuse the two joins" ask, realized by broadcast: one scan of e,
       // zero shuffles, where the old form paid two keyed exchanges).
-      val compEdges = e
+      val compEdges = GraftCache.checkpoint(e
         .join(broadcast(endLabels.select(col("id").as("s"), col("comp").as("cs"))), Seq("s"))
         .join(broadcast(endLabels.select(col("id").as("d"), col("comp").as("cd"))), Seq("d"))
         .select(col("cs"), col("cd"))
-        .filter(col("cs") =!= col("cd")).distinct()
-        .localCheckpoint()
+        .filter(col("cs") =!= col("cd")).distinct())
       // new singletons (batch endpoints the corpus labels do not cover)
       val newbies = ends.join(broadcast(known.select("id")), Seq("id"), "left_anti")
         .select(col("id"), col("id").as("component"))
@@ -357,10 +327,8 @@ object Dedup {
     // The emptiness probe is one action over the batch-sized edge frame.
     if (compEdges.isEmpty) all
     else {
-      // CC over the tiny component graph, shuffles capped like the rest:
-      // old label -> merged label
-      val merges = connectedComponents(compEdges, "cs", "cd",
-          shufflePartitions = Some(4))
+      // CC over the tiny component graph: old label -> merged label
+      val merges = connectedComponents(compEdges, "cs", "cd")
         .select(col("id").as("__old"), col("component").as("__new"))
       all.join(broadcast(merges), all("component") === col("__old"), "left")
         .select(all("id"),

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.GraftCache
+
 /** Iterative graph analytics over edge frames. Complements the connected-
   * components machinery in [[Dedup]] (cluster identity) with CENTRALITY —
   * which nodes the graph's own link structure endorses. In a curation
@@ -34,74 +36,50 @@ object Graph {
     * both Spark `div` and DuckDB `//`); the truncation dust (< 1 ppm per
     * edge per iteration) is part of the defined semantics, not error.
     *
-    * Scale shape: `edges` is hash-partitioned by src ONCE and persisted;
-    * each iteration is one equi-join of the |V|-row rank frame onto it, a
-    * BIGINT sum by dst (map-side combinable — integer addition is
-    * associative, which is the whole point of the ppm form), and a left
-    * join back onto the node list so zero-indegree nodes keep their
-    * (1e6 - d) floor. Per-iteration ranks persist via [[graft.GraftCache]]
-    * (Pregel discipline: the frame is reused by the NEXT iteration's join,
-    * and without the persist the lineage re-derives every prior iteration
-    * per stage). Nodes absent from `edges`' src side contribute nothing
-    * (dangling mass is dropped, not redistributed — the recurrence the
-    * oracle replays; at corpus scale the kNN graphs this serves have a
-    * fixed out-degree, so no dangling nodes exist).
+    * Scale shape: the edge frame (with each edge's source out-degree) is
+    * materialized once through [[graft.GraftCache.checkpoint]]; each
+    * iteration joins it to the BROADCAST |V|-row rank frame, sums BIGINT
+    * contributions by dst (map-side combinable — integer addition is
+    * associative, which is the whole point of the ppm form), and left-
+    * joins the broadcast in-sums back onto the node list so zero-indegree
+    * nodes keep their (1e6 - d) floor. The one per-round shuffle (the
+    * in-sum by dst) runs at the width [[Dedup.withDerivedWidth]] derives
+    * from the edge count. Each round is an eager tracked checkpoint that
+    * frees its predecessor: measured FASTER than letting the nested
+    * broadcast plan accumulate (3.8s vs 5.8s at sf0.1), and the registry
+    * holds the edge frame plus the final ranks until the caller's
+    * `GraftCache.release()`. Nodes absent from `edges`' src side
+    * contribute nothing (dangling mass is dropped, not redistributed —
+    * the recurrence the oracle replays; at corpus scale the kNN graphs
+    * this serves have a fixed out-degree, so no dangling nodes exist).
     *
     * `nodes` = one `id` column (every vertex, including isolated ones);
     * `edges` = `src`/`dst` columns, duplicates meaningful (a duplicated
     * edge carries double weight — callers wanting simple graphs distinct
-    * first). Returns (id, rank_ppm).
-    *
-    * `compact = true` is the batch-sized-graph regime (the x48
-    * incremental-CC discipline): when |V| broadcasts, every per-iteration
-    * join runs broadcast-side with no keyed exchange, rounds flatten
-    * through eager localCheckpoints instead of cache persists, and the one
-    * remaining shuffle (the in-sum by dst) runs under a 4-partition cap —
-    * at few-hundred-node scale 32-way exchanges are pure task-scheduling
-    * overhead. The default shape is the corpus-scale one: edges hash-
-    * partitioned by src once, |V|-row rank frames shuffled, nothing
-    * broadcast that grows with the graph. */
+    * first). Returns (id, rank_ppm). */
   def pageRankPpm(nodes: DataFrame, edges: DataFrame, iters: Int,
-                  dampPpm: Long = 850000L,
-                  compact: Boolean = false): DataFrame = {
+                  dampPpm: Long = 850000L): DataFrame = {
     require(iters >= 0, "iters must be non-negative")
     require(dampPpm >= 0 && dampPpm <= 1000000L, "dampPpm must be in [0, 1e6]")
     val deg = edges.groupBy("src").agg(count(lit(1)).as("__outdeg"))
     val n = nodes.select(col("id"))
-    def next(e: DataFrame, ranks: DataFrame, bcast: Boolean): DataFrame = {
-      val r = ranks.withColumnRenamed("id", "src")
-      val inc = e.join(if (bcast) broadcast(r) else r, Seq("src"))
-        .select(col("dst").as("id"), expr("rank_ppm div __outdeg").as("__c"))
-        .groupBy("id").agg(sum("__c").as("__inc"))
-      n.join(if (bcast) broadcast(inc) else inc, Seq("id"), "left")
-        .select(col("id"),
-          (lit(1000000L - dampPpm) +
-            expr(s"($dampPpm * coalesce(__inc, 0L)) div 1000000")
-          ).as("rank_ppm"))
-    }
-    if (compact) {
-      Dedup.withShufflePartitions(nodes.sparkSession, 4) {
-        val e = edges.join(broadcast(deg), Seq("src"))
-          .select(col("src"), col("dst"), col("__outdeg"))
-          .localCheckpoint()
-        // per-round eager localCheckpoint: measured FASTER than letting
-        // the 10-level plan accumulate (3.8s vs 5.8s at sf0.1) — analysis/
-        // optimization of the deep nested-broadcast DAG costs more than 10
-        // small checkpoint jobs.
-        var ranks = n.select(col("id"), lit(1000000L).as("rank_ppm"))
-          .localCheckpoint()
-        for (_ <- 1 to iters)
-          ranks = next(e, ranks, bcast = true).localCheckpoint()
-        ranks
+    val e = GraftCache.checkpoint(edges.join(broadcast(deg), Seq("src"))
+      .select(col("src"), col("dst"), col("__outdeg")))
+    Dedup.withDerivedWidth(e) {
+      var ranks = GraftCache.checkpoint(
+        n.select(col("id"), lit(1000000L).as("rank_ppm")))
+      for (_ <- 1 to iters) {
+        val inc = e.join(broadcast(ranks.withColumnRenamed("id", "src")),
+            Seq("src"))
+          .select(col("dst").as("id"), expr("rank_ppm div __outdeg").as("__c"))
+          .groupBy("id").agg(sum("__c").as("__inc"))
+        ranks = GraftCache.advance(ranks,
+          n.join(broadcast(inc), Seq("id"), "left")
+            .select(col("id"),
+              (lit(1000000L - dampPpm) +
+                expr(s"($dampPpm * coalesce(__inc, 0L)) div 1000000")
+              ).as("rank_ppm")))
       }
-    } else {
-      val e = graft.GraftCache.persist(
-        edges.join(deg, Seq("src"))
-          .select(col("src"), col("dst"), col("__outdeg"))
-          .repartition(col("src")))
-      var ranks = n.select(col("id"), lit(1000000L).as("rank_ppm"))
-      for (_ <- 1 to iters)
-        ranks = graft.GraftCache.persist(next(e, ranks, bcast = false))
       ranks
     }
   }

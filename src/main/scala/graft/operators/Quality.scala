@@ -195,8 +195,8 @@ object Quality {
     // partitioning the caller's persisted frame would have served the
     // aggregate, so the round-4 mean-gradient chain the oracle unrolls
     // is untouched.
-    val base = df.select((featureCols :+ labelCol).map(col): _*)
-      .localCheckpoint()
+    val base = graft.GraftCache.checkpoint(
+      df.select((featureCols :+ labelCol).map(col): _*))
     var w = Vector.fill(featureCols.size)(0.0)
     var b = 0.0
     for (_ <- 1 to iters) {
@@ -237,8 +237,8 @@ object Quality {
     // K·(|features|+1) aggregates per action, so the per-iteration
     // re-analysis of a deep input lineage compounded K-fold on the
     // x119/pl16 gates.
-    val base = df.select((featureCols :+ classCol).map(col): _*)
-      .localCheckpoint()
+    val base = graft.GraftCache.checkpoint(
+      df.select((featureCols :+ classCol).map(col): _*))
     val n = featureCols.size
     val ws = Array.fill(classes.size)(Vector.fill(n)(0.0))
     val bs = Array.fill(classes.size)(0.0)

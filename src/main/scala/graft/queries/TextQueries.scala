@@ -274,6 +274,19 @@ object TextQueries {
       greatest(cand: _*).getField("p").as("pred_lang"))
   }
 
+  /** The stored-vocab lifecycle the BPE serves share: learn
+    * [[BpeApplyIters]] merges on `train`, WRITE them as query `name`'s
+    * vocab artifact, and read back the ordered (sym_a, sym_b) rules. */
+  private def storedBpeRules(s: SparkSession, name: String,
+                             train: DataFrame): Seq[(String, String)] = {
+    val vocabPath = SinkQueries.sinkDir(s"${name}_bpe_vocab")
+    BpeTrainer.learnMerges(train, "doc_id", "text", BpeApplyIters)
+      .coalesce(1).write.mode("overwrite").parquet(vocabPath)
+    s.read.parquet(vocabPath).orderBy("it")
+      .select("sym_a", "sym_b").collect()
+      .map(r => (r.getString(0), r.getString(1))).toSeq
+  }
+
   def queries: Map[String, Q] = Map(
     // ------------------------------------------------------------------ x0
     // Exact dedup by hash-groupBy: fingerprint → one shuffle → per-key
@@ -417,8 +430,8 @@ object TextQueries {
     // crawl curation weights by: a source whose content keeps appearing
     // elsewhere ranks high, an island stays on the damping floor.
     // Scale shape: pair discovery is the LSH screen (never all-pairs),
-    // the graph is |sources|-sized, and the fixpoint is the compact
-    // broadcast regime.
+    // the graph is |sources|-sized, and every fixpoint round broadcasts
+    // its rank frame.
     "x91_source_authority" -> ((s, dir) => {
       val t = Tables(s, dir)
       val pairs = TextOps.minhashNearDups(t.documents, "doc_id", "text",
@@ -435,7 +448,7 @@ object TextQueries {
         .unionAll(e0.select(col("src_b").as("src"), col("src_a").as("dst")))
       val nodes = t.documents.select(col("source").as("id")).distinct()
       graft.operators.Graph
-        .pageRankPpm(nodes, edges, AuthorityIters, compact = true)
+        .pageRankPpm(nodes, edges, AuthorityIters)
         .select(col("id").as("source"), col("rank_ppm"))
         .orderBy(desc("rank_ppm"), col("source"))
     }),
@@ -1456,12 +1469,7 @@ object TextQueries {
     // symbol sequence — one mis-merged token anywhere flips the hash.
     "x101_bpe_apply" -> ((s, dir) => {
       val t = Tables(s, dir)
-      val vocabPath = SinkQueries.sinkDir("x101_bpe_vocab")
-      BpeTrainer.learnMerges(t.documents, "doc_id", "text", BpeApplyIters)
-        .coalesce(1).write.mode("overwrite").parquet(vocabPath)
-      val rules = s.read.parquet(vocabPath).orderBy("it")
-        .select("sym_a", "sym_b").collect()
-        .map(r => (r.getString(0), r.getString(1))).toSeq
+      val rules = storedBpeRules(s, "x101", t.documents)
       BpeTrainer.applyMerges(t.documents, "doc_id", "text", rules)
         .select(col("id").as("doc_id"), col("n_symbols"), col("sym_fp"))
         .orderBy("doc_id")
@@ -1479,12 +1487,7 @@ object TextQueries {
     // probed at 1k+ rules for flat plan size).
     "x105_bpe_apply_local" -> ((s, dir) => {
       val t = Tables(s, dir)
-      val vocabPath = SinkQueries.sinkDir("x105_bpe_vocab")
-      BpeTrainer.learnMerges(t.documents, "doc_id", "text", BpeApplyIters)
-        .coalesce(1).write.mode("overwrite").parquet(vocabPath)
-      val rules = s.read.parquet(vocabPath).orderBy("it")
-        .select("sym_a", "sym_b").collect()
-        .map(r => (r.getString(0), r.getString(1))).toSeq
+      val rules = storedBpeRules(s, "x105", t.documents)
       BpeTrainer.applyMergesLocal(t.documents, "doc_id", "text", rules)
         .select(col("id").as("doc_id"), col("n_symbols"), col("sym_fp"))
         .orderBy("doc_id")
@@ -1503,17 +1506,12 @@ object TextQueries {
     // byte expansion.
     "x131_bpe_byte_fallback" -> ((s, dir) => {
       val t = Tables(s, dir)
-      val vocabPath = SinkQueries.sinkDir("x131_bpe_vocab")
-      BpeTrainer.learnMerges(t.documents, "doc_id", "text", BpeApplyIters)
-        .coalesce(1).write.mode("overwrite").parquet(vocabPath)
+      val rules = storedBpeRules(s, "x131", t.documents)
       val alphaPath = SinkQueries.sinkDir("x131_bpe_alphabet")
       t.documents
         .select(explode(graft.operators.TextOps.tokens(col("text")))
           .as("sym"))
         .distinct().coalesce(1).write.mode("overwrite").parquet(alphaPath)
-      val rules = s.read.parquet(vocabPath).orderBy("it")
-        .select("sym_a", "sym_b").collect()
-        .map(r => (r.getString(0), r.getString(1))).toSeq
       val alphabet = s.read.parquet(alphaPath).collect()
         .map(_.getString(0)).toSet
       val served = t.documents.withColumn("text",
@@ -1542,12 +1540,7 @@ object TextQueries {
       val t = Tables(s, dir)
       val sample = graft.operators.Curation.stratifiedSample(t.documents,
         "lang", "doc_id", Map.empty, BpeSamplePerMille, BpeSampleBuckets)
-      val vocabPath = SinkQueries.sinkDir("x106_bpe_vocab")
-      BpeTrainer.learnMerges(sample, "doc_id", "text", BpeApplyIters)
-        .coalesce(1).write.mode("overwrite").parquet(vocabPath)
-      val rules = s.read.parquet(vocabPath).orderBy("it")
-        .select("sym_a", "sym_b").collect()
-        .map(r => (r.getString(0), r.getString(1))).toSeq
+      val rules = storedBpeRules(s, "x106", sample)
       // Guard the oracle's unrolled shape (round-15 advice): if the
       // sampled corpus exhausted distinct pairs early, learnMerges
       // returns FEWER rules, but the oracle's merge-pass chain is

@@ -1003,9 +1003,9 @@ object VectorQueries {
         // materialize over the post-append index. The checkpoint cuts
         // lineage to materialized blocks (8 rows), leaving no path
         // reference for the recache to rewrite.
-        val curve = VectorOps.fitRecallCurve(
+        val curve = graft.GraftCache.checkpoint(VectorOps.fitRecallCurve(
           holdout, "vec_id", "embedding", corpus, KnnK, KClusters,
-          cents, cb, s.read.parquet(s"$idx/codes")).localCheckpoint()
+          cents, cb, s.read.parquet(s"$idx/codes")))
         val chosen = VectorOps.chooseNprobe(curve, RecallFloorPpm, KClusters)
         curve.select(lit(name).as("phase"), col("nprobe"),
           col("recall_ppm"), (col("nprobe") === chosen).as("chosen"))
@@ -1046,9 +1046,9 @@ object VectorQueries {
         // x114: the delete/compact writes that follow phase 1 must not
         // re-materialize a lazily-cached phase-1 curve over the pruned
         // index
-        val curve = VectorOps.fitRecallCurve(
+        val curve = graft.GraftCache.checkpoint(VectorOps.fitRecallCurve(
           holdout, "vec_id", "embedding", corpus, KnnK, KClusters,
-          cents, cb, s.read.parquet(codes)).localCheckpoint()
+          cents, cb, s.read.parquet(codes)))
         val chosen = VectorOps.chooseNprobe(curve, RecallFloorPpm, KClusters)
         curve.select(lit(name).as("phase"), col("nprobe"),
           col("recall_ppm"), (col("nprobe") === chosen).as("chosen"))
@@ -1268,7 +1268,7 @@ object VectorQueries {
           lit(true), KnnK)
         .select(col("qid").as("src"), col("vec_id").as("dst"))
       val nodes = sub.select(col("vec_id").as("id"))
-      Graph.pageRankPpm(nodes, edges, PrIters, compact = true)
+      Graph.pageRankPpm(nodes, edges, PrIters)
         .select(col("id").as("vec_id"), col("rank_ppm"))
         .orderBy(desc("rank_ppm"), col("vec_id"))
     }),
@@ -1669,9 +1669,9 @@ object VectorQueries {
         .filter(col("vec_id") % KnnQueryMod === RecallHoldoutRes)
       def phase(name: String, corpus: org.apache.spark.sql.DataFrame,
                 codes: String): org.apache.spark.sql.DataFrame = {
-        val curve = VectorOps.fitRecallCurve(
+        val curve = graft.GraftCache.checkpoint(VectorOps.fitRecallCurve(
           holdout, "vec_id", "embedding", corpus, KnnK, KClusters,
-          storedCents, cb, s.read.parquet(codes)).localCheckpoint()
+          storedCents, cb, s.read.parquet(codes)))
         val chosen = VectorOps.chooseNprobe(curve, RecallFloorPpm, KClusters)
         curve.select(lit(name).as("phase"), col("nprobe"),
           col("recall_ppm"), (col("nprobe") === chosen).as("chosen"))

@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -21,6 +22,31 @@ import org.apache.spark.sql.types._
   * the event-time watermark.
   */
 object EventStreams {
+
+  /** Starts `df` as an append stream that runs `body` on every micro-batch
+    * inside [[graft.GraftCache.scoped]]: what the batch registers (persists,
+    * checkpoints) is freed when it returns, while frames the caller built
+    * before the stream started — a `baseline`, a `model`, a `bandIndex` —
+    * stay readable for every later batch. */
+  private def eachBatch(df: DataFrame, checkpointDir: String)(
+      body: (DataFrame, Long) => Unit): StreamingQuery =
+    df.writeStream
+      .outputMode("append")
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        graft.GraftCache.scoped(body(batch, batchId))
+      }
+      .start()
+
+  /** [[eachBatch]] for the per-batch logs: each micro-batch OVERWRITES its
+    * own `batch_id=<n>` partition of `outDir` with `perBatch(batch)`, so a
+    * batch replayed after a failure replaces its own rows instead of
+    * duplicating them. */
+  private def logEachBatch(df: DataFrame, checkpointDir: String, outDir: String)(
+      perBatch: DataFrame => DataFrame): StreamingQuery =
+    eachBatch(df, checkpointDir) { (batch, batchId) =>
+      perBatch(batch).write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
+    }
 
   /** Open the events directory as a file stream (one-file-per-trigger keeps
     * tests deterministic; production would point at an arriving directory).
@@ -277,19 +303,12 @@ object EventStreams {
       indexedDocs: DataFrame,
       threshold: Double,
       checkpointDir: String,
-      outDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    arrivals.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.TextOps
-          .minhashNearDupsAgainstIndex(batch, bandIndex, indexedDocs,
-            "doc_id", "text", threshold)
-          .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-        graft.GraftCache.release()
-        ()
-      }
-      .start()
+      outDir: String): StreamingQuery =
+    logEachBatch(arrivals, checkpointDir, outDir) { batch =>
+      graft.operators.TextOps
+        .minhashNearDupsAgainstIndex(batch, bandIndex, indexedDocs,
+          "doc_id", "text", threshold)
+    }
 
   /** Streaming SEMANTIC screen — the embedding-space sibling of
     * [[screenArrivalsIndexed]]: every arriving micro-batch of vectors is
@@ -313,18 +332,11 @@ object EventStreams {
       codebooks: Seq[Seq[(Long, Seq[Double])]],
       k: Int,
       checkpointDir: String,
-      outDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    arrivals.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.VectorOps
-          .pqKnnAgainstCodes(batch, "vec_id", "embedding", codes, k, codebooks)
-          .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-        graft.GraftCache.release()
-        ()
-      }
-      .start()
+      outDir: String): StreamingQuery =
+    logEachBatch(arrivals, checkpointDir, outDir) { batch =>
+      graft.operators.VectorOps
+        .pqKnnAgainstCodes(batch, "vec_id", "embedding", codes, k, codebooks)
+    }
 
   /** [[screenArrivalsSemantic]] ROUTED through the composed IVF-PQ index
     * ([[graft.operators.VectorOps.writeIvfPqIndex]]) — the billion-scale
@@ -342,23 +354,16 @@ object EventStreams {
       k: Int,
       nprobe: Int,
       checkpointDir: String,
-      outDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
+      outDir: String): StreamingQuery = {
     // the cells are frozen for the life of the stored index — collect the
     // k×dim centroid table ONCE here, not once per micro-batch (a
     // per-trigger parquet read + collect job would dominate small batches)
     val cents = graft.operators.VectorOps.collectCentroids(centroids)
-    arrivals.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.VectorOps
-          .pqKnnAgainstCodesRouted(batch, "vec_id", "embedding", k, nprobe,
-            cents, codebooks, codes)
-          .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-        graft.GraftCache.release()
-        ()
-      }
-      .start()
+    logEachBatch(arrivals, checkpointDir, outDir) { batch =>
+      graft.operators.VectorOps
+        .pqKnnAgainstCodesRouted(batch, "vec_id", "embedding", k, nprobe,
+          cents, codebooks, codes)
+    }
   }
 
   /** Streaming DSIR gate: every arriving micro-batch is scored against
@@ -379,18 +384,11 @@ object EventStreams {
       model: DataFrame,
       buckets: Int,
       checkpointDir: String,
-      outDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    arrivals.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.Curation
-          .dsirScoreAgainstModel(batch, model, "doc_id", "text", buckets)
-          .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-        graft.GraftCache.release()
-        ()
-      }
-      .start()
+      outDir: String): StreamingQuery =
+    logEachBatch(arrivals, checkpointDir, outDir) { batch =>
+      graft.operators.Curation
+        .dsirScoreAgainstModel(batch, model, "doc_id", "text", buckets)
+    }
 
   /** STREAMING crawl intake — pl19's front end as a continuous job: the
     * arriving-file stream of a watched crawl directory (Spark's
@@ -412,42 +410,35 @@ object EventStreams {
       spark: SparkSession,
       filesDir: String,
       checkpointDir: String,
-      outDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
+      outDir: String): StreamingQuery = {
     import org.apache.spark.sql.types._
     val binarySchema = StructType(Seq(
       StructField("path", StringType),
       StructField("modificationTime", TimestampType),
       StructField("length", LongType),
       StructField("content", BinaryType)))
-    spark.readStream.format("binaryFile")
+    val files = spark.readStream.format("binaryFile")
       .option("pathGlobFilter", "*.warc.gz")
       .schema(binarySchema)
       .load(filesDir)
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val media = batch.select(
-          org.apache.spark.sql.functions
-            .regexp_extract(col("path"), "-([0-9]+)\\.warc\\.gz$", 1)
-            .cast("long").as("doc_id"),
-          col("content").as("payload"),
-          org.apache.spark.sql.functions.lit("application/warc")
-            .as("media_type"),
-          org.apache.spark.sql.functions.lit("").as("lang"))
-        val recovered = graft.operators.Multimodal
-          .recoverWarcDocs(spark, media).toDF()
-        val q = graft.operators.TextOps
-          .qualityMetrics(recovered, "text")
-          .select("doc_id", "n_tokens", "quality_ok")
-        q.join(recovered.select(col("doc_id"),
-            graft.operators.TextOps.fingerprint(col("text")).as("fp")),
-            "doc_id")
-          .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-        graft.GraftCache.release()
-        ()
-      }
-      .start()
+    logEachBatch(files, checkpointDir, outDir) { batch =>
+      val media = batch.select(
+        org.apache.spark.sql.functions
+          .regexp_extract(col("path"), "-([0-9]+)\\.warc\\.gz$", 1)
+          .cast("long").as("doc_id"),
+        col("content").as("payload"),
+        org.apache.spark.sql.functions.lit("application/warc")
+          .as("media_type"),
+        org.apache.spark.sql.functions.lit("").as("lang"))
+      val recovered = graft.operators.Multimodal
+        .recoverWarcDocs(spark, media).toDF()
+      val q = graft.operators.TextOps
+        .qualityMetrics(recovered, "text")
+        .select("doc_id", "n_tokens", "quality_ok")
+      q.join(recovered.select(col("doc_id"),
+          graft.operators.TextOps.fingerprint(col("text")).as("fp")),
+          "doc_id")
+    }
   }
 
   /** Streaming corpus-drift monitor: every arriving micro-batch is
@@ -470,18 +461,11 @@ object EventStreams {
       strataCol: String,
       sizeCol: String,
       checkpointDir: String,
-      outDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    arrivals.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.Curation
-          .corpusDrift(baseline, batch, strataCol, sizeCol)
-          .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-        graft.GraftCache.release()
-        ()
-      }
-      .start()
+      outDir: String): StreamingQuery =
+    logEachBatch(arrivals, checkpointDir, outDir) { batch =>
+      graft.operators.Curation
+        .corpusDrift(baseline, batch, strataCol, sizeCol)
+    }
 
   /** Streaming cluster maintenance — the COMPLETE nightly dedup loop as a
     * stream: each arriving micro-batch (1) screens against the
@@ -511,31 +495,25 @@ object EventStreams {
       threshold: Double,
       checkpointDir: String,
       indexDir: String,
-      labelsDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    arrivals.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val cross = graft.operators.TextOps
-          .minhashNearDupsAgainstIndex(batch, spark.read.parquet(indexDir),
-            allDocs, "doc_id", "text", threshold)
-          .select(col("id_new").as("id_a"), col("id_idx").as("id_b"))
-        val internal = graft.operators.TextOps
-          .minhashNearDups(batch, "doc_id", "text", threshold)
-          .select("id_a", "id_b")
-        val labels = spark.read.parquet(latestLabelVersion(spark, labelsDir))
-        graft.operators.Dedup
-          .incrementalComponents(labels, cross.unionByName(internal),
-            "id_a", "id_b")
-          .write.mode("overwrite").parquet(s"$labelsDir/v${batchId + 1}")
-        graft.operators.TextOps
-          .appendBandIndexExactlyOnce(batch, "doc_id", "text", indexDir,
-            batchId)
-        graft.GraftCache.release()
-        ()
-      }
-      .start()
+      labelsDir: String): StreamingQuery =
+    eachBatch(arrivals, checkpointDir) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val cross = graft.operators.TextOps
+        .minhashNearDupsAgainstIndex(batch, spark.read.parquet(indexDir),
+          allDocs, "doc_id", "text", threshold)
+        .select(col("id_new").as("id_a"), col("id_idx").as("id_b"))
+      val internal = graft.operators.TextOps
+        .minhashNearDups(batch, "doc_id", "text", threshold)
+        .select("id_a", "id_b")
+      val labels = spark.read.parquet(latestLabelVersion(spark, labelsDir))
+      graft.operators.Dedup
+        .incrementalComponents(labels, cross.unionByName(internal),
+          "id_a", "id_b")
+        .write.mode("overwrite").parquet(s"$labelsDir/v${batchId + 1}")
+      graft.operators.TextOps
+        .appendBandIndexExactlyOnce(batch, "doc_id", "text", indexDir,
+          batchId)
+    }
 
   /** Seed the drift-maintained vector-index state [[maintainVectorIndex]]
     * serves from: the corpus (vectors double-cast so appended batches
@@ -594,64 +572,58 @@ object EventStreams {
       driftPpmThreshold: Long,
       checkpointDir: String,
       indexDir: String,
-      logDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    arrivals.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val b = graft.GraftCache.persist(batch.select(col("vec_id"),
-          transform(col("embedding"), x => x.cast("double")).as("embedding")))
-        val nBatch = b.count()
-        if (nBatch > 0) {
-          // prior snapshot = latest version ≤ batchId, NOT plain latest: a
-          // replayed batch must see the same immutable inputs it saw the
-          // first time even though its own (or a later) version already
-          // exists — this is what makes the recomputed decision identical.
-          val cents = graft.operators.VectorOps.collectCentroids(
-            spark.read.parquet(
-              versionAtMost(spark, s"$indexDir/centroids", batchId)))
-          val standing = spark.read
-            .parquet(versionAtMost(spark, s"$indexDir/cellcounts", batchId))
-            .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-          val bCounts = graft.operators.VectorOps
-            .collectCellCounts(b, "vec_id", "embedding", cents)
-          val ppm = graft.operators.VectorOps
-            .tvdPpmFromCounts(standing, bCounts)
-          val retrain = ppm > driftPpmThreshold
-          graft.sinks.LayoutSink
-            .appendExactlyOnce(b, s"$indexDir/corpus", batchId)
-          if (retrain) {
-            val corpus = spark.read.parquet(s"$indexDir/corpus")
-            val newCents = graft.operators.VectorOps
-              .kmeansCentroids(corpus, "vec_id", "embedding", k, iters)
-            newCents.coalesce(1).write.mode("overwrite")
-              .parquet(s"$indexDir/centroids/v${batchId + 1}")
-            graft.operators.VectorOps
-              .cellCounts(corpus, "vec_id", "embedding",
-                graft.operators.VectorOps.collectCentroids(newCents))
-              .coalesce(1).write.mode("overwrite")
-              .parquet(s"$indexDir/cellcounts/v${batchId + 1}")
-          } else {
-            val merged = (standing.keySet ++ bCounts.keySet).toSeq.sorted
-              .map(c => (c, standing.getOrElse(c, 0L) + bCounts.getOrElse(c, 0L)))
-            spark.createDataFrame(merged).toDF("cid", "n")
-              .coalesce(1).write.mode("overwrite")
-              .parquet(s"$indexDir/cellcounts/v${batchId + 1}")
-          }
-          // batch_id rides in the partition directory, not the rows — a
-          // whole-log read then partition-discovers it without colliding
-          // with a stored column of the same name.
-          spark.createDataFrame(Seq(
-              (nBatch, ppm, if (retrain) "retrain" else "append")))
-            .toDF("n_batch", "drift_ppm", "decision")
+      logDir: String): StreamingQuery =
+    eachBatch(arrivals, checkpointDir) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val b = graft.GraftCache.persist(batch.select(col("vec_id"),
+        transform(col("embedding"), x => x.cast("double")).as("embedding")))
+      val nBatch = b.count()
+      if (nBatch > 0) {
+        // prior snapshot = latest version ≤ batchId, NOT plain latest: a
+        // replayed batch must see the same immutable inputs it saw the
+        // first time even though its own (or a later) version already
+        // exists — this is what makes the recomputed decision identical.
+        val cents = graft.operators.VectorOps.collectCentroids(
+          spark.read.parquet(
+            versionAtMost(spark, s"$indexDir/centroids", batchId)))
+        val standing = spark.read
+          .parquet(versionAtMost(spark, s"$indexDir/cellcounts", batchId))
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        val bCounts = graft.operators.VectorOps
+          .collectCellCounts(b, "vec_id", "embedding", cents)
+        val ppm = graft.operators.VectorOps
+          .tvdPpmFromCounts(standing, bCounts)
+        val retrain = ppm > driftPpmThreshold
+        graft.sinks.LayoutSink
+          .appendExactlyOnce(b, s"$indexDir/corpus", batchId)
+        if (retrain) {
+          val corpus = spark.read.parquet(s"$indexDir/corpus")
+          val newCents = graft.operators.VectorOps
+            .kmeansCentroids(corpus, "vec_id", "embedding", k, iters)
+          newCents.coalesce(1).write.mode("overwrite")
+            .parquet(s"$indexDir/centroids/v${batchId + 1}")
+          graft.operators.VectorOps
+            .cellCounts(corpus, "vec_id", "embedding",
+              graft.operators.VectorOps.collectCentroids(newCents))
             .coalesce(1).write.mode("overwrite")
-            .parquet(s"$logDir/batch_id=$batchId")
+            .parquet(s"$indexDir/cellcounts/v${batchId + 1}")
+        } else {
+          val merged = (standing.keySet ++ bCounts.keySet).toSeq.sorted
+            .map(c => (c, standing.getOrElse(c, 0L) + bCounts.getOrElse(c, 0L)))
+          spark.createDataFrame(merged).toDF("cid", "n")
+            .coalesce(1).write.mode("overwrite")
+            .parquet(s"$indexDir/cellcounts/v${batchId + 1}")
         }
-        graft.GraftCache.release()
-        ()
+        // batch_id rides in the partition directory, not the rows — a
+        // whole-log read then partition-discovers it without colliding
+        // with a stored column of the same name.
+        spark.createDataFrame(Seq(
+            (nBatch, ppm, if (retrain) "retrain" else "append")))
+          .toDF("n_batch", "drift_ppm", "decision")
+          .coalesce(1).write.mode("overwrite")
+          .parquet(s"$logDir/batch_id=$batchId")
       }
-      .start()
+    }
 
   /** Retention pass for the per-batch stream logs ([[screenArrivalsIndexed]],
     * [[scoreArrivalsDsir]], [[monitorDrift]]): each micro-batch lands one
@@ -703,24 +675,18 @@ object EventStreams {
       keyCol: String,
       k: Int,
       checkpointDir: String,
-      sketchDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    arrivals.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        spark.read.parquet(latestLabelVersion(spark, sketchDir)).select(col("h"))
-          .unionByName(batch
-            .select(graft.operators.TextOps
-              .md5Hash60(col(keyCol).cast("string")).as("h")))
-          .agg(graft.operators.Aggregations.kmvSketch(col("h"), k).as("sk"))
-          .select(explode(col("sk")).as("h"))
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$sketchDir/v${batchId + 1}")
-        graft.GraftCache.release()
-        ()
-      }
-      .start()
+      sketchDir: String): StreamingQuery =
+    eachBatch(arrivals, checkpointDir) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      spark.read.parquet(latestLabelVersion(spark, sketchDir)).select(col("h"))
+        .unionByName(batch
+          .select(graft.operators.TextOps
+            .md5Hash60(col(keyCol).cast("string")).as("h")))
+        .agg(graft.operators.Aggregations.kmvSketch(col("h"), k).as("sk"))
+        .select(explode(col("sk")).as("h"))
+        .coalesce(1).write.mode("overwrite")
+        .parquet(s"$sketchDir/v${batchId + 1}")
+    }
 
   /** Seed the streaming-maintained value histogram: the standing corpus's
     * log₂-mantissa bucket counts write as version v0. */
@@ -744,22 +710,16 @@ object EventStreams {
       arrivals: DataFrame,
       valueCol: String,
       checkpointDir: String,
-      histDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    arrivals.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        spark.read.parquet(versionAtMost(spark, histDir, batchId))
-          .unionByName(graft.operators.Aggregations
-            .logHistogramBuckets(batch, valueCol))
-          .groupBy("msb", "sub").agg(sum("c").as("c"))
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$histDir/v${batchId + 1}")
-        graft.GraftCache.release()
-        ()
-      }
-      .start()
+      histDir: String): StreamingQuery =
+    eachBatch(arrivals, checkpointDir) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      spark.read.parquet(versionAtMost(spark, histDir, batchId))
+        .unionByName(graft.operators.Aggregations
+          .logHistogramBuckets(batch, valueCol))
+        .groupBy("msb", "sub").agg(sum("c").as("c"))
+        .coalesce(1).write.mode("overwrite")
+        .parquet(s"$histDir/v${batchId + 1}")
+    }
 
   /** Seed the streaming-maintained seen-fingerprint Bloom filter: the
     * standing history's fingerprints fold into version v0 (geometry
@@ -791,29 +751,23 @@ object EventStreams {
       arrivals: DataFrame,
       fpCol: String,
       checkpointDir: String,
-      bloomDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    arrivals.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val prev = spark.read.parquet(versionAtMost(spark, bloomDir, batchId))
-        val prevRow = prev.select("n_bits", "n_probes").head()
-        val (nb, np) = (prevRow.getInt(0), prevRow.getInt(1))
-        batch
-          .agg(graft.operators.Bloom
-            .sketch(xxhash64(col(fpCol)), nb, np).as("bwords"))
-          .crossJoin(broadcast(prev.select(col("words"))))
-          .select(
-            graft.operators.Bloom.orWords(col("words"), col("bwords"))
-              .as("words"),
-            lit(nb).as("n_bits"), lit(np).as("n_probes"))
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$bloomDir/v${batchId + 1}")
-        graft.GraftCache.release()
-        ()
-      }
-      .start()
+      bloomDir: String): StreamingQuery =
+    eachBatch(arrivals, checkpointDir) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val prev = spark.read.parquet(versionAtMost(spark, bloomDir, batchId))
+      val prevRow = prev.select("n_bits", "n_probes").head()
+      val (nb, np) = (prevRow.getInt(0), prevRow.getInt(1))
+      batch
+        .agg(graft.operators.Bloom
+          .sketch(xxhash64(col(fpCol)), nb, np).as("bwords"))
+        .crossJoin(broadcast(prev.select(col("words"))))
+        .select(
+          graft.operators.Bloom.orWords(col("words"), col("bwords"))
+            .as("words"),
+          lit(nb).as("n_bits"), lit(np).as("n_probes"))
+        .coalesce(1).write.mode("overwrite")
+        .parquet(s"$bloomDir/v${batchId + 1}")
+    }
 
   /** Seed the SHARDED rotating maintainer: the standing history folds
     * into the sharded frame v0 ([[graft.operators.Bloom.sketchSharded]];
@@ -982,94 +936,88 @@ object EventStreams {
       checkpointDir: String,
       bloomDir: String,
       histDir: String,
-      rotateFillPpm: Long = 500000L): org.apache.spark.sql.streaming.StreamingQuery =
-    arrivals.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        graft.sinks.LayoutSink.appendExactlyOnce(
-          batch.select(col(fpCol).as("fp")), histDir, batchId): Unit
-        val prev = spark.read.parquet(versionAtMost(spark, bloomDir, batchId))
-        // bounded scalar collects: per-shard geometry + frame constants
-        val geo = prev.select("shard", "n_bits").collect()
-          .map(r => r.getInt(0) -> r.getInt(1)).toMap
-        val meta = prev.select("n_probes", "n_shards", "base_req").head()
-        val (np, nS, baseReq) = (meta.getInt(0), meta.getInt(1), meta.getLong(2))
-        // completed pending rebuild newer than the watermark? cut over
-        val fsDir = new org.apache.hadoop.fs.Path(bloomDir)
-        val fs = fsDir.getFileSystem(spark.sessionState.newHadoopConf())
-        val readyReq = rotationRequestIds(spark, bloomDir)
-          .filter(r => r > baseReq && fs.exists(new org.apache.hadoop.fs.Path(
-            fsDir, s"pending-$r/_SUCCESS")))
-          .sorted.lastOption
-        val (base, servedGeo, newBase) = readyReq match {
-          case Some(r) =>
-            val rebuilt = spark.read.parquet(s"$bloomDir/pending-$r")
-            val histMax = rebuilt.select("hist_max").head().getLong(0)
-            val rotGeo = rebuilt.select("shard", "n_bits").collect()
-              .map(x => x.getInt(0) -> x.getInt(1)).toMap
-            // interim = history batches the rebuild had not seen yet —
-            // bounded by the rebuild-to-cutover gap, never the history
-            val interim = historyBatchFiles(spark, histDir,
-              histMax + 1, batchId - 1)
-            val rotatedRows =
-              if (interim.isEmpty) rebuilt.select(FrameCols.map(col): _*)
-              else orFrames(rebuilt.select(FrameCols.map(col): _*),
-                graft.operators.Bloom.sketchShardedAt(
-                  spark.read.parquet(interim: _*), xxhash64(col("fp")),
-                  rotGeo, np, nS))
-            val kept = prev.select(FrameCols.map(col): _*)
-              .filter(!col("shard").isin(rotGeo.keys.toSeq: _*))
-            (kept.unionByName(rotatedRows), geo ++ rotGeo, r)
-          case None => (prev.select(FrameCols.map(col): _*), geo, baseReq)
-        }
-        val batchSk = graft.operators.Bloom.sketchShardedAt(
-          batch.select(col(fpCol).as("fp")), xxhash64(col("fp")),
-          servedGeo, np, nS)
-        publishFrameVersion(
-          orFrames(base, batchSk).withColumn("base_req", lit(newBase)),
-          bloomDir, batchId + 1)
-        // rotation decision from the just-written frame (nShards rows;
-        // popcount runs inside the scan, driver sees scalars)
-        val saturated = graft.operators.Bloom.shardFill(
-            spark.read.parquet(s"$bloomDir/v${batchId + 1}"))
-          .filter(col("fill_ppm") > rotateFillPpm)
-          .select("shard").collect().map(_.getInt(0)).sorted
-        // skip when a request is in flight (> watermark), and never
-        // re-issue an id a prior run already used (a replayed batch must
-        // not overwrite a consumed request with a different shard list —
-        // the still-saturated shard simply re-requests at a later batch)
-        val outstanding = rotationRequestIds(spark, bloomDir)
-          .exists(r => r > newBase || r >= batchId + 1)
-        if (saturated.nonEmpty && !outstanding) {
-          // fail fast on an unseeded history: a rebuild from a partial
-          // history would drop every seeded member and silently re-admit
-          // them forever
-          require(fs.exists(new org.apache.hadoop.fs.Path(
-              new org.apache.hadoop.fs.Path(histDir), "_batch-1.done")),
-            s"rotation requires a seeded history: $histDir lacks the " +
-              "seedSeenBloomSharded seed marker (_batch-1.done)")
-          // write-then-rename so the offline rebuild can never read a
-          // partially written shard list (the tmp name is _-prefixed and
-          // cannot match the rotate-req-* glob)
-          val tmp = new org.apache.hadoop.fs.Path(
-            fsDir, s"_rotate-req-${batchId + 1}.tmp")
-          val req = fs.create(tmp, true)
-          try req.write(saturated.mkString(",")
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          finally req.close()
-          val dst = new org.apache.hadoop.fs.Path(
-            fsDir, s"rotate-req-${batchId + 1}")
-          if (!fs.rename(tmp, dst))
-            throw new java.io.IOException(
-              s"rename $tmp -> $dst returned false; rotation request " +
-                "not committed")
-        }
-        graft.GraftCache.release()
-        ()
+      rotateFillPpm: Long = 500000L): StreamingQuery =
+    eachBatch(arrivals, checkpointDir) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      graft.sinks.LayoutSink.appendExactlyOnce(
+        batch.select(col(fpCol).as("fp")), histDir, batchId): Unit
+      val prev = spark.read.parquet(versionAtMost(spark, bloomDir, batchId))
+      // bounded scalar collects: per-shard geometry + frame constants
+      val geo = prev.select("shard", "n_bits").collect()
+        .map(r => r.getInt(0) -> r.getInt(1)).toMap
+      val meta = prev.select("n_probes", "n_shards", "base_req").head()
+      val (np, nS, baseReq) = (meta.getInt(0), meta.getInt(1), meta.getLong(2))
+      // completed pending rebuild newer than the watermark? cut over
+      val fsDir = new org.apache.hadoop.fs.Path(bloomDir)
+      val fs = fsDir.getFileSystem(spark.sessionState.newHadoopConf())
+      val readyReq = rotationRequestIds(spark, bloomDir)
+        .filter(r => r > baseReq && fs.exists(new org.apache.hadoop.fs.Path(
+          fsDir, s"pending-$r/_SUCCESS")))
+        .sorted.lastOption
+      val (base, servedGeo, newBase) = readyReq match {
+        case Some(r) =>
+          val rebuilt = spark.read.parquet(s"$bloomDir/pending-$r")
+          val histMax = rebuilt.select("hist_max").head().getLong(0)
+          val rotGeo = rebuilt.select("shard", "n_bits").collect()
+            .map(x => x.getInt(0) -> x.getInt(1)).toMap
+          // interim = history batches the rebuild had not seen yet —
+          // bounded by the rebuild-to-cutover gap, never the history
+          val interim = historyBatchFiles(spark, histDir,
+            histMax + 1, batchId - 1)
+          val rotatedRows =
+            if (interim.isEmpty) rebuilt.select(FrameCols.map(col): _*)
+            else orFrames(rebuilt.select(FrameCols.map(col): _*),
+              graft.operators.Bloom.sketchShardedAt(
+                spark.read.parquet(interim: _*), xxhash64(col("fp")),
+                rotGeo, np, nS))
+          val kept = prev.select(FrameCols.map(col): _*)
+            .filter(!col("shard").isin(rotGeo.keys.toSeq: _*))
+          (kept.unionByName(rotatedRows), geo ++ rotGeo, r)
+        case None => (prev.select(FrameCols.map(col): _*), geo, baseReq)
       }
-      .start()
+      val batchSk = graft.operators.Bloom.sketchShardedAt(
+        batch.select(col(fpCol).as("fp")), xxhash64(col("fp")),
+        servedGeo, np, nS)
+      publishFrameVersion(
+        orFrames(base, batchSk).withColumn("base_req", lit(newBase)),
+        bloomDir, batchId + 1)
+      // rotation decision from the just-written frame (nShards rows;
+      // popcount runs inside the scan, driver sees scalars)
+      val saturated = graft.operators.Bloom.shardFill(
+          spark.read.parquet(s"$bloomDir/v${batchId + 1}"))
+        .filter(col("fill_ppm") > rotateFillPpm)
+        .select("shard").collect().map(_.getInt(0)).sorted
+      // skip when a request is in flight (> watermark), and never
+      // re-issue an id a prior run already used (a replayed batch must
+      // not overwrite a consumed request with a different shard list —
+      // the still-saturated shard simply re-requests at a later batch)
+      val outstanding = rotationRequestIds(spark, bloomDir)
+        .exists(r => r > newBase || r >= batchId + 1)
+      if (saturated.nonEmpty && !outstanding) {
+        // fail fast on an unseeded history: a rebuild from a partial
+        // history would drop every seeded member and silently re-admit
+        // them forever
+        require(fs.exists(new org.apache.hadoop.fs.Path(
+            new org.apache.hadoop.fs.Path(histDir), "_batch-1.done")),
+          s"rotation requires a seeded history: $histDir lacks the " +
+            "seedSeenBloomSharded seed marker (_batch-1.done)")
+        // write-then-rename so the offline rebuild can never read a
+        // partially written shard list (the tmp name is _-prefixed and
+        // cannot match the rotate-req-* glob)
+        val tmp = new org.apache.hadoop.fs.Path(
+          fsDir, s"_rotate-req-${batchId + 1}.tmp")
+        val req = fs.create(tmp, true)
+        try req.write(saturated.mkString(",")
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        finally req.close()
+        val dst = new org.apache.hadoop.fs.Path(
+          fsDir, s"rotate-req-${batchId + 1}")
+        if (!fs.rename(tmp, dst))
+          throw new java.io.IOException(
+            s"rename $tmp -> $dst returned false; rotation request " +
+              "not committed")
+      }
+    }
 
   /** The OFFLINE/async half of the rotation (the pl12 versioned-artifact
     * pattern): serve continues on the absorbed filter while this job
@@ -1175,15 +1123,11 @@ object EventStreams {
     * exactly like the vector-index and band-index loops. */
   def streamChangesToMor(changes: DataFrame, dir: String, keyCol: String,
                          opCol: String, checkpointDir: String)
-    : org.apache.spark.sql.streaming.StreamingQuery =
-    changes.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.sinks.MorTable.merge(batch.toDF(), dir, keyCol, opCol,
-          batchId + 1)
-      }
-      .start()
+    : StreamingQuery =
+    eachBatch(changes, checkpointDir) { (batch, batchId) =>
+      graft.sinks.MorTable.merge(batch.toDF(), dir, keyCol, opCol,
+        batchId + 1)
+    }
 
   /** Streaming LAKEHOUSE intake: every CDC micro-batch publishes as one
     * atomic Delta-protocol MERGE commit
@@ -1208,17 +1152,13 @@ object EventStreams {
   def streamChangesToDelta(changes: DataFrame, path: String, keyCol: String,
                            opCol: String, checkpointDir: String,
                            appId: String = null)
-    : org.apache.spark.sql.streaming.StreamingQuery = {
+    : StreamingQuery = {
     val app = if (appId != null) appId else s"graft-delta:$checkpointDir"
-    changes.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.sinks.DeltaExport.commitMergeByKey(batch.sparkSession, path,
-          batch.toDF(), keyCol, opCol,
-          txn = Some((app, batchId))): Unit
-      }
-      .start()
+    eachBatch(changes, checkpointDir) { (batch, batchId) =>
+      graft.sinks.DeltaExport.commitMergeByKey(batch.sparkSession, path,
+        batch.toDF(), keyCol, opCol,
+        txn = Some((app, batchId))): Unit
+    }
   }
 
   def streamToDocumentSink(
@@ -1227,16 +1167,11 @@ object EventStreams {
       checkpointDir: String,
       batchSize: Int = 1000,
       reports: scala.collection.mutable.Buffer[graft.sinks.DocumentSink.UploadReport] = null)
-    : org.apache.spark.sql.streaming.StreamingQuery =
-    dedupEvents(events).writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val docs = graft.sinks.DocumentSink.prepare(
-          batch, lit("events"), col("event_id"))
-        val report = graft.sinks.DocumentSink.writeBatched(docs, writer, batchSize)
-        if (reports != null) reports += report
-        ()
-      }
-      .start()
+    : StreamingQuery =
+    eachBatch(dedupEvents(events), checkpointDir) { (batch, _) =>
+      val docs = graft.sinks.DocumentSink.prepare(
+        batch, lit("events"), col("event_id"))
+      val report = graft.sinks.DocumentSink.writeBatched(docs, writer, batchSize)
+      if (reports != null) reports += report
+    }
 }

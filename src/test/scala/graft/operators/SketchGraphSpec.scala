@@ -173,15 +173,12 @@ class SketchGraphSpec extends SparkSpec {
     val nodes = (0L until 200L)
     val edges = Seq.fill(900)((rnd.nextInt(200).toLong, rnd.nextInt(200).toLong))
       .filter { case (a, b) => a != b }
-    def run(parts: Int, compact: Boolean): Map[Long, Long] =
+    def run(parts: Int): Map[Long, Long] =
       Graph.pageRankPpm(
         nodes.toDF("id").repartition(parts),
-        edges.toDF("src", "dst").repartition(parts), 6, compact = compact)
+        edges.toDF("src", "dst").repartition(parts), 6)
       .as[(Long, Long)].collect().toMap
-    assert(run(1, compact = false) == run(13, compact = false))
-    // the compact (broadcast/localCheckpoint) regime is plan shape only —
-    // bit-identical ranks
-    assert(run(13, compact = true) == run(1, compact = false))
+    assert(run(1) == run(13))
   }
 
   // ------------------------------------------------------------ bloom filter
